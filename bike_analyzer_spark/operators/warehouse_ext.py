@@ -3,13 +3,8 @@ didn't cover yet: conditional-aggregate ratio over a dim join (TPC-H
 Q14 shape), dimension-filtered ANTI join, correlated-scalar-subquery-
 rewritten-as-window, and CUBE with grouping ids.
 
-STAGED FOR ROUND 8 REGISTRATION: every round-7 driver-window slot is
-occupied by a <2-streak query (tests/test_rotation.py forbids new
-registrations without a freed slot; ~48 slots free once the r7 greens
-land). The queries are fully oracle-gated by pytest
-(tests/test_warehouse_ext.py drives the same DuckDB comparison the
-driver runs) and `__spark_entry__._MODULES` picks this module up in
-round 8 by adding it to the list.
+Every query is oracle-gated against DuckDB by
+tests/test_warehouse_ext.py.
 
 Exactness discipline (functions/exact): money lifts to integer cents,
 ratios/averages display through pure-bigint half-up, the

@@ -203,6 +203,14 @@ def _load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(TESTDATA[name]).parquet(path)
 
 
+def _configure_once(spark: SparkSession) -> None:
+    """Run `configure` (session-wide conf: timezone, AQE, Arrow,
+    nanosAsLong) once per session, guarded by a conf sentinel."""
+    if spark.conf.get(_CONFIGURED_FLAG, None) != "true":
+        configure(spark)
+        spark.conf.set(_CONFIGURED_FLAG, "true")
+
+
 def _load_table_direct(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The un-spread read of a table, unit-converted where needed."""
     if name == "events":
@@ -222,9 +230,7 @@ def load_events_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg/sum-of-double corpus queries do NOT — they must keep the
     1-file `load` read whose scan order matches the sequential
     DuckDB oracle (see the SPREAD_TABLES note above)."""
-    if spark.conf.get(_CONFIGURED_FLAG, None) != "true":
-        configure(spark)
-        spark.conf.set(_CONFIGURED_FLAG, "true")
+    _configure_once(spark)
     return _load_spread(spark, sf_dir, "events")
 
 
@@ -247,17 +253,11 @@ def table_rows(sf_dir: str, name: str) -> int:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table with its pinned schema.
-
-    `configure` mutates session-wide conf (timezone, AQE, Arrow,
-    nanosAsLong), so it runs once per session — guarded by a conf
-    sentinel — instead of on every table read.
-    """
+    """Load one testdata table with its pinned schema (session conf
+    configured once, not on every table read)."""
     if name not in TESTDATA:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    if spark.conf.get(_CONFIGURED_FLAG, None) != "true":
-        configure(spark)
-        spark.conf.set(_CONFIGURED_FLAG, "true")
+    _configure_once(spark)
     if name in SPREAD_TABLES:
         return _load_spread(spark, sf_dir, name)
     # Pinned schema (never inferSchema): plans stay stable across scale
@@ -359,9 +359,7 @@ def events_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     read through this so their scans prune to a handful of partition
     dirs via PartitionFilters — the default plan at scale, not a demo.
     """
-    if spark.conf.get(_CONFIGURED_FLAG, None) != "true":
-        configure(spark)
-        spark.conf.set(_CONFIGURED_FLAG, "true")
+    _configure_once(spark)
     path = events_partitioned_path(sf_dir)
     marker = os.path.join(path, "_FINGERPRINT.json")
     st = os.stat(os.path.join(sf_dir, "events.parquet"))

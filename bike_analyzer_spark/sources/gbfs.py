@@ -79,10 +79,6 @@ def pick_feed_url(feeds: list[dict[str, Any]], feed_name: str) -> str | None:
     return None
 
 
-def _get(st: dict[str, Any], key: str):
-    return st.get(key)
-
-
 def station_rows(si: dict[str, Any]) -> list[tuple]:
     """station_information payload -> typed row tuples (STATIONS
     order). Pure function shared by the driver-side `stations_df`
@@ -220,7 +216,8 @@ def ingest_once(
         "last_updated",
     )
     status = status_df(spark, ss, scraped_at)
-    n_status = status.count()
+    # status_rows emits one row per station: no Spark job to count them
+    n_status = len(ss.get("data", {}).get("stations", []))
     sinks.append_partitioned(
         status, os.path.join(warehouse, "station_status.parquet"), "scraped_at"
     )

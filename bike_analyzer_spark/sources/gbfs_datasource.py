@@ -49,6 +49,29 @@ FEED_INFO = "station_information"
 FEED_STATUS = "station_status"
 
 
+def _landing_dir(options) -> str:
+    path = options.get("path")
+    if not path:
+        raise ValueError("gbfs: the 'path' option is required")
+    return path
+
+
+def _snapshots(path: str) -> list[str]:
+    """The landed `*.json` snapshots under `path`, name-sorted so scan
+    order and stream offsets are deterministic."""
+    return sorted(glob.glob(os.path.join(path, "*.json")))
+
+
+def _snapshot_rows(path: str, feed: str):
+    """Parse ONE snapshot file into typed tuples via the shared
+    feed-dispatched row function (gbfs.payload_rows)."""
+    from .gbfs import payload_rows
+
+    with open(path) as f:
+        payload = json.load(f)
+    yield from payload_rows(payload, feed)
+
+
 class GbfsDataSource(DataSource):
     """Register with ``spark.dataSource.register(GbfsDataSource)``."""
 
@@ -76,15 +99,10 @@ class GbfsDataSource(DataSource):
 
 class _GbfsReader(DataSourceReader):
     def __init__(self, options):
-        path = options.get("path")
-        if not path:
-            raise ValueError("gbfs: the 'path' option is required")
+        path = _landing_dir(options)
         self._feed = options.get("feed", FEED_INFO)
-        # plan partitions at PLANNING time from the driver's listing;
-        # name-sorted so the scan order is deterministic
-        self._files = sorted(
-            glob.glob(os.path.join(path, "*.json"))
-        )
+        # partitions are planned from this one listing
+        self._files = _snapshots(path)
         if not self._files:
             raise ValueError(f"gbfs: no *.json snapshots under {path}")
 
@@ -94,13 +112,8 @@ class _GbfsReader(DataSourceReader):
         return [InputPartition(f) for f in self._files]
 
     def read(self, partition):
-        # executor-side: parse THIS file only, emit typed tuples via
-        # the shared feed-dispatched builder (gbfs.payload_rows)
-        from .gbfs import payload_rows
-
-        with open(partition.value) as f:
-            payload = json.load(f)
-        yield from payload_rows(payload, self._feed)
+        # executor-side: parse THIS file only
+        yield from _snapshot_rows(partition.value, self._feed)
 
 
 class _GbfsStreamReader(SimpleDataSourceStreamReader):
@@ -113,33 +126,19 @@ class _GbfsStreamReader(SimpleDataSourceStreamReader):
     replays a committed range deterministically after a restart."""
 
     def __init__(self, options):
-        path = options.get("path")
-        if not path:
-            raise ValueError("gbfs: the 'path' option is required")
-        self._path = path
+        self._path = _landing_dir(options)
         self._feed = options.get("feed", FEED_INFO)
 
     def _files_after(self, watermark: str):
-        return sorted(
-            f
-            for f in glob.glob(os.path.join(self._path, "*.json"))
-            if os.path.basename(f) > watermark
-        )
-
-    def _rows_for(self, files):
-        from .gbfs import payload_rows
-
-        for path in files:
-            with open(path) as f:
-                payload = json.load(f)
-            yield from payload_rows(payload, self._feed)
-
-    def _files_below(self, watermark: str):
         return [
             f
-            for f in glob.glob(os.path.join(self._path, "*.json"))
-            if os.path.basename(f) <= watermark
+            for f in _snapshots(self._path)
+            if os.path.basename(f) > watermark
         ]
+
+    def _rows_for(self, files):
+        for path in files:
+            yield from _snapshot_rows(path, self._feed)
 
     def initialOffset(self) -> dict:
         return {"watermark": "", "n_below": 0}
@@ -152,7 +151,10 @@ class _GbfsStreamReader(SimpleDataSourceStreamReader):
         # many files sat at/below the mark when it was taken, and a
         # mismatch means the landing broke the sortable-names
         # contract (at-most-once is never acceptable silently)
-        n_below = len(self._files_below(start["watermark"]))
+        n_below = sum(
+            os.path.basename(f) <= start["watermark"]
+            for f in _snapshots(self._path)
+        )
         if n_below != start.get("n_below", n_below):
             raise ValueError(
                 "gbfs stream: a snapshot landed BEHIND the committed "

@@ -42,20 +42,10 @@ def windowed_avg(
     status: DataFrame, minutes: int = 10, watermark: str = "30 minutes"
 ) -> DataFrame:
     """Tumbling-window mean availability per station; watermark bounds
-    state. Works identically on batch and streaming frames."""
-    df = status
-    if df.isStreaming:
-        df = df.withWatermark("scraped_at", watermark)
-    return (
-        df.groupBy(
-            F.window("scraped_at", f"{minutes} minutes").alias("w"),
-            "station_id",
-        )
-        .agg(F.avg("num_bikes_available").alias("avg_bikes"))
-        .select(
-            F.col("w.start").alias("bucket_start"), "station_id", "avg_bikes"
-        )
-    )
+    state. Works identically on batch and streaming frames. A sliding
+    window whose slide equals its size IS the tumbling window: Spark
+    plans it without the Expand a true sliding window needs."""
+    return sliding_avg(status, minutes, minutes, watermark)
 
 
 def sliding_avg(

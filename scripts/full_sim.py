@@ -1,10 +1,8 @@
-"""Driver-contract simulation over the WHOLE query corpus: run every
-`queries()` entry and its DuckDB oracle side-by-side and compare the
-sorted row multisets exactly — the same gate the round driver applies
-to the first 50 queries at sf0.01, extended to all queries and any
-scale factor.
+"""Oracle sweep over the WHOLE query corpus: run every `queries()`
+entry and its DuckDB oracle side-by-side and compare the sorted row
+multisets exactly — the tests/oracle.py gate, at any scale factor.
 
-Running this at sf0.1 (not just the driver's sf0.01) is what caught
+Running this at sf0.1 (not just the tests' sf0.01) is what caught
 round 6's cross-engine rounding-boundary bugs: averages of 2-decimal
 data over 2^a·5^b-sized groups flip one ulp between Spark's
 BigDecimal HALF_UP and DuckDB's double rounding, and which groups
@@ -59,7 +57,6 @@ def main() -> int:
             print(f"unknown queries: {sorted(missing)}")
             return 2
         qs = {k: v for k, v in qs.items() if k in only}
-    from bench import _free_leaked_blocks
 
     bad = []
     for i, (name, fn) in enumerate(qs.items()):
@@ -72,9 +69,11 @@ def main() -> int:
             print(f"ERR {name}: {type(e).__name__}: {str(e)[:200]}")
         finally:
             # free leaked localCheckpoint blocks between queries —
-            # the 230-query sweep otherwise degrades like the bench
-            # did before the same fix there (see bench.py)
-            _free_leaked_blocks(spark)
+            # they accumulate over the 230-query sweep until the
+            # block manager squeezes execution memory
+            spark.catalog.clearCache()
+            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+                rdd.unpersist(True)
         print(f"{i + 1}/{len(qs)} {name} {'ok' if ok else 'MISMATCH'}")
         if not ok:
             bad.append(name)

@@ -1,8 +1,8 @@
 """Ad-hoc timing helper: time named queries at a given SF in isolation.
 
 Usage: python scripts/time_queries.py q1 q2 ... [--sf /root/testdata/sf0.1]
-Prints per-query p50 of 3 reps via the noop sink (same methodology as
-bench.py). Dev tool only — the official numbers come from bench.py.
+Prints per-query p50 of 3 reps via the noop sink. Dev tool only — the
+repo's benchmark is perfbench/run.py (see BENCHMARK.json).
 """
 
 from __future__ import annotations
@@ -33,9 +33,8 @@ def main() -> int:
             t0 = time.perf_counter()
             qs[name](spark, sf).write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)
-            # same inter-rep hygiene as bench.py:_free_leaked_blocks —
-            # leaked localCheckpoint blocks otherwise contaminate the
-            # NEXT measurement (r12 §0)
+            # free leaked localCheckpoint blocks between reps — they
+            # otherwise contaminate the NEXT measurement (r12 §0)
             spark.catalog.clearCache()
             for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
                 rdd.unpersist(True)

@@ -20,9 +20,8 @@ def spark():
     # scheduling than computing — measured r13 on the three slowest
     # recovery-matrix surfaces: local[32] 158 s, local[8] 69-81 s,
     # local[4] 175 s (too few threads for the 8 shuffle partitions).
-    # Scale behavior is NOT tested here (bench.py honors
-    # $SPARK_GRAFT_CPUS; tests assert correctness), so the test core
-    # count is a harness choice, not part of the driver contract.
+    # Scale behavior is NOT tested here (tests assert correctness),
+    # so the test core count is a harness choice.
     s = get_spark(
         app_name="bike-analyzer-spark-tests",
         master="local[8]",

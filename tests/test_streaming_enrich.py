@@ -161,3 +161,15 @@ def test_sliding_stream_matches_batch(spark, tdir):
     # overlap is real: the :05 window averages the :05 and :10 snapshots
     w05 = got[(t0 + dt.timedelta(minutes=5), "s1")]
     assert w05 == pytest.approx((5 + 6) / 2)
+
+def test_tumbling_window_plans_without_expand(spark):
+    """windowed_avg is sliding_avg with slide == size; Spark must plan
+    it as a tumbling window (one bucket per row, no Expand), while a
+    true sliding window still expands each row into its windows."""
+    df = _status_batch(spark, dt.datetime(2025, 9, 4, 15, 0, 0), 4)
+
+    def optimized(q):
+        return q._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "Expand" not in optimized(streaming.windowed_avg(df))
+    assert "Expand" in optimized(streaming.sliding_avg(df, 10, 5))
